@@ -84,6 +84,9 @@ object Sinks {
 
   private def q(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
   private def qq(table: String): String = table.split('.').map(q).mkString(".")
+  /** Spark SQL identifier quoting, for the schema strings Spark parses
+    * (`createTableColumnTypes`): flattened names carry a `-`. */
+  private def bq(ident: String): String = "`" + ident.replace("`", "``") + "`"
 
   /** The ordered server-side statements [[writeJdbcUpsert]] executes
     * after the staging load: optional CREATE TABLE, the dialect's merge
@@ -125,7 +128,7 @@ object Sinks {
     val withTypes =
       if (dialect == "merge" && stringCols.nonEmpty)
         writer.option("createTableColumnTypes",
-          stringCols.map(c => s"$c VARCHAR(32000)").mkString(", "))
+          stringCols.map(c => s"${bq(c)} VARCHAR(32000)").mkString(", "))
       else writer
     withTypes.jdbc(jdbcUrl, qq(staging), props)
     val conn = connect()

@@ -58,4 +58,26 @@ class JdbcUpsertSpec extends SparkSpec {
     assert(after("t1")._1 == "Completed") // untouched
     assert(after.contains("t3"))
   }
+
+  test("writeJdbcUpsert merge: flattened `-` column names land quoted") {
+    // the shape Flatten's `-` separator produces from a nested `dates`
+    val batch = Seq(
+      ("t1", "2024-01-01", Timestamp.valueOf("2024-01-01 00:00:00")),
+      ("t1", "2024-01-03", Timestamp.valueOf("2024-01-02 00:00:00")), // newer
+      ("t2", "2024-02-01", Timestamp.valueOf("2024-01-01 00:00:00")))
+      .toDF("id", "dates-start", "updatedDate")
+    (1 to 2).foreach { _ => // the second write MERGEs onto an existing table
+      Sinks.writeJdbcUpsert(batch, url, "flat_tasks", Seq("id"), "updatedDate",
+        props, () => connect(), dialect = "merge")
+    }
+    val c = connect()
+    val got = try {
+      val rs = c.createStatement().executeQuery(
+        """SELECT "id", "dates-start" FROM "flat_tasks"""")
+      val b = Map.newBuilder[String, String]
+      while (rs.next()) b += rs.getString(1) -> rs.getString(2)
+      b.result()
+    } finally c.close()
+    assert(got == Map("t1" -> "2024-01-03", "t2" -> "2024-02-01"))
+  }
 }
