@@ -2,7 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Bench main (driver contract): times every registered query at the given
   * scale factor and prints ONE JSON line.
@@ -34,6 +36,9 @@ object Bench {
     // steady-state time, dominated by per-stage C2 compilation — a cost a
     // long-lived cluster pays once, which one-shot timing would otherwise
     // charge to whichever query happens to run first.
+    // The timed passes reuse the warm-up's compiled classes only while
+    // the codegen cache holds the suite's working set (LocalSession); the
+    // per-pass compile counts in the detail file show whether it did.
     // SPARK_GRAFT_WARMUP=0/false/off disables; =1/true/on warms against
     // the bench dir (the default); anything else is a directory to warm
     // against (e.g. a smaller SF).
@@ -42,17 +47,28 @@ object Bench {
       case "1" | "true" | "on" => Some(sfDir)
       case dir => Some(dir)
     }
-    warmDir.foreach { warm =>
-      selected.foreach { case (name, fn) =>
+    // `body`'s result and the Janino compilations it caused: (count, ms).
+    // Deterministic per pass, so a thrashing compiled-class cache is
+    // visible in the ledger whatever the host's speed.
+    def withCompiles[T](body: => T): (T, (Long, Long)) = {
+      val (n0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        CodeGenerator.compileTime)
+      val r = body
+      (r, (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+        (CodeGenerator.compileTime - ns0) / 1000000))
+    }
+    val warmCompiles = warmDir.map { warm =>
+      val (_, warmed) = withCompiles(selected.foreach { case (name, fn) =>
         try fn(spark, warm).queryExecution.toRdd.foreach(_ => ())
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
         }
         spark.catalog.clearCache()
-      }
+      })
       // start the timed pass from a clean heap so warmup garbage doesn't
       // trigger a collection inside some unlucky timed query
       System.gc()
+      warmed
     }
     // Timed passes: per-query MIN over SPARK_GRAFT_PASSES runs (default
     // 2). A single-shot measurement charges whatever GC pause or
@@ -103,9 +119,9 @@ object Bench {
       (dt, ok, gc, cores)
     }
     val timedStart = (gcMillis, cpuNanos, System.nanoTime())
-    val allPasses = (1 to passes).map { p =>
-      selected.map { case (name, fn) => timeOnce(name, p, fn) }
-    }
+    val (allPasses, passCompiles) = (1 to passes).map { p =>
+      withCompiles(selected.map { case (name, fn) => timeOnce(name, p, fn) })
+    }.unzip
     val timedWallS = (System.nanoTime() - timedStart._3) / 1e9
     val envGcMs = gcMillis - timedStart._1
     val envCpuUtil =
@@ -133,13 +149,20 @@ object Bench {
         s""","gc_ms":[${runs.map(_._3).mkString(",")}]""" +
         f""","cpu_cores":[${runs.map(r => f"${r._4}%.1f").mkString(",")}]}"""
     }.mkString("{\n", ",\n", "\n}")
+    // warm-up first (null when disabled), then each timed pass
+    val codegenJson = {
+      val all = warmCompiles +: passCompiles.map(Some(_))
+      def list(f: ((Long, Long)) => Long) =
+        all.map(_.fold("null")(c => f(c).toString)).mkString("[", ",", "]")
+      s""""codegen_compiles":${list(_._1)},"codegen_compile_ms":${list(_._2)}"""
+    }
     try {
       if (detailPath.getParent != null)
         java.nio.file.Files.createDirectories(detailPath.getParent)
       java.nio.file.Files.writeString(detailPath,
         f"""{"sf":"$sfDir","passes":$passes,"wall_s":$timedWallS%.1f,""" +
           f""""env":{"gc_ms":$envGcMs,"cpu_util":$envCpuUtil%.3f,""" +
-          f""""load1m":$envLoad%.1f},%n"queries":$detail}%n""")
+          f""""load1m":$envLoad%.1f,$codegenJson},%n"queries":$detail}%n""")
       System.err.println(s"[bench] detail -> $detailPath")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}")

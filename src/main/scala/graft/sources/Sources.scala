@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -255,7 +257,9 @@ object Sources {
     * reference declares this intent but misapplies the decorator to pure
     * functions (SURVEY §2.1 C2); here it wraps the actual fetch.
     * [[AlreadyWaited]] failures retry immediately (their wait was served
-    * inside the attempt) and leave the backoff schedule unadvanced. */
+    * inside the attempt) and leave the backoff schedule unadvanced. Only
+    * `NonFatal` failures retry: an `InterruptedException` (a cancelled
+    * sync) or a fatal error propagates from the first attempt. */
   def withRetries[T](attempts: Int = 5, backoffMs: Long = 1000,
                      maxBackoffMs: Long = 10000)(f: => T): T = {
     var remaining = attempts
@@ -266,7 +270,7 @@ object Sources {
         case e: AlreadyWaited =>
           remaining -= 1
           if (remaining <= 0) throw e
-        case e: Throwable =>
+        case NonFatal(e) =>
           remaining -= 1
           if (remaining <= 0) throw e
           Thread.sleep(backoff)

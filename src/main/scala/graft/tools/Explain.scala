@@ -1,23 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSession, SparkEntry}
 
-import graft.SparkEntry
-
-/** Dev main: print the formatted physical plan of one registered query.
+/** Dev main: print the formatted physical plan of one registered query,
+  * planned by the same session Bench and Verify time.
   * Usage: runMain graft.tools.Explain <query_name> [sfDir] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     spark.stop()
   }

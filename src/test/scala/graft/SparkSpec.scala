@@ -15,6 +15,9 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // sized like the harness sessions (see LocalSession)
+      .config("spark.sql.codegen.cache.maxEntries",
+        LocalSession.CodegenCacheMaxEntries.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -78,6 +78,17 @@ class SourcesExtraSpec extends SparkSpec {
     }
   }
 
+  test("withRetries does not retry an interrupt: one call, and it propagates") {
+    var calls = 0
+    intercept[InterruptedException] {
+      Sources.withRetries(attempts = 3, backoffMs = 1) {
+        calls += 1
+        throw new InterruptedException("sync cancelled")
+      }
+    }
+    assert(calls == 1)
+  }
+
   test("RateLimiter paces acquisitions (C1)") {
     val rl = new Sources.RateLimiter(100.0) // 10ms interval
     val t0 = System.nanoTime()
