@@ -98,6 +98,26 @@ object Snapshots {
   def tableAt(base: String, version: Long): String =
     if (version <= 0L) base else s"${base}_v$version"
 
+  /** Physical name of a MANIFEST-published family's manifest at
+    * `version`: the one-column `(segment)` list of the tables whose
+    * union is that version's data
+    * ([[graft.streaming.Streams.substringIngestManifest]]'s layout,
+    * written by [[graft.operators.TextDedup.writeManifest]]). */
+  def manifestAt(base: String, version: Long): String =
+    tableAt(s"${base}_mf", version)
+
+  /** Every segment table the manifests of `versions` list — the live
+    * set [[decommissionBase]] and [[graft.operators.TextDedup
+    * .retireSubstringManifest]] must keep. Versions without a manifest
+    * (retired, or a table-per-version family) contribute nothing. */
+  def manifestSegments(spark: SparkSession, base: String,
+                       versions: Seq[Long]): Set[String] =
+    versions.map(manifestAt(base, _)).filter(spark.catalog.tableExists(_))
+      .flatMap { mf =>
+        spark.catalog.refreshTable(mf)
+        spark.table(mf).select(col("segment")).collect().map(_.getString(0))
+      }.toSet
+
   /** Append one row to the family's SIDECAR EVENT LOG
     * (`<ledgerTable>_events`) — observability rows that must NOT live
     * in the ledger itself: the ledger is the idempotency record
@@ -544,31 +564,36 @@ object Snapshots {
   }
 
   /** Reclaim the MIGRATED version-0 base: a family that migrated in
-    * place (an existing unversioned table folded into v1 —
-    * [[graft.streaming.Streams.substringIngestVersioned]]'s batch-0
-    * contract) keeps its base table forever, because [[retire]]
-    * deliberately drops only versions ≥ 1: v0 is the operator's
-    * fallback while the versioned lineage is young. That fallback is a
-    * permanent duplicate copy of the entire index on disk, so once the
-    * lineage has outgrown the grace window — `currentVersion −
-    * keepVersions ≥ 1`, i.e. every version a reader could still be
-    * holding is a versioned snapshot, not the base — this drops the
-    * base tables explicitly and records a `decommission_base` row in
-    * the sidecar event log ([[logEvent]]; NOT the ledger — the act
-    * mutates no served version, and ledger actions feed the
-    * [[versionConflicts]] audit). Idempotent: a repeat call (or a
-    * crashed call's rerun) finds the tables gone and returns false
-    * without a second event row. Replays of the migration batch stay
-    * no-ops — [[isApplied]] reads the ledger, which keeps every row.
-    * Returns true when any base table was actually dropped. */
+    * place (an existing unversioned table serving as version 0 —
+    * [[graft.streaming.Streams.substringIngestManifest]]'s
+    * migrate-in-place contract) keeps its base table forever, because
+    * [[retire]] deliberately drops only versions ≥ 1: v0 is the
+    * operator's fallback while the versioned lineage is young. That
+    * fallback is a permanent duplicate copy of the entire index on
+    * disk, so once the lineage has outgrown the grace window —
+    * `currentVersion − keepVersions ≥ 1`, i.e. every version a reader
+    * could still be holding is a versioned snapshot, not the base —
+    * this drops the base tables explicitly and records a
+    * `decommission_base` row in the sidecar event log ([[logEvent]];
+    * NOT the ledger — the act mutates no served version, and ledger
+    * actions feed the [[versionConflicts]] audit). A manifest-published
+    * family serves the base itself as a segment until a compaction
+    * folds it in, so a base any manifest in the grace window still
+    * lists ([[manifestSegments]]) is kept. Idempotent: a repeat call
+    * (or a crashed call's rerun) finds the tables gone and returns
+    * false without a second event row. Replays of the migration batch
+    * stay no-ops — [[isApplied]] reads the ledger, which keeps every
+    * row. Returns true when any base table was actually dropped. */
   def decommissionBase(spark: SparkSession, ledgerTable: String,
                        indexName: String, bases: Seq[String],
                        keepVersions: Int = 2): Boolean = {
     require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
     val cur = currentVersion(spark, ledgerTable, indexName)
-    if (cur - keepVersions < 1) false
+    val cutoff = cur - keepVersions
+    if (cutoff < 1) false
     else {
-      val present = bases.filter(spark.catalog.tableExists(_))
+      val present = bases.filter(b => spark.catalog.tableExists(b) &&
+        !manifestSegments(spark, b, (cutoff + 1) to cur).contains(b))
       present.foreach(graft.sinks.Sinks.dropManaged(spark, _))
       if (present.nonEmpty)
         logEvent(spark, ledgerTable, indexName, s"decommission-v0",

@@ -1054,34 +1054,15 @@ object TextDedup {
       table, Seq("gram_key"), numBuckets)
 
   /** A corpus's DISTINCT L-gram doubling keys as `(gram_key)` — the
-    * exact frame [[writeSubstringIndex]] persists, exposed so staged
-    * snapshot writers ([[graft.streaming.Streams
-    * .substringIngestVersioned]]) and maintenance repairs can build /
-    * extend an index table under their own commit protocol. */
+    * exact frame [[writeSubstringIndex]] persists, exposed so segment
+    * writers ([[graft.streaming.Streams.substringIngestManifest]]) and
+    * maintenance repairs can build / extend an index under their own
+    * commit protocol. */
   def substringGramKeys(docs: DataFrame, idCol: String, textCol: String,
                         L: Int): DataFrame = {
     require(L >= 2, s"L must be >= 2, got $L")
     substringKeys(docs, idCol, textCol, L)
       .select(col("_h").as("gram_key")).distinct()
-  }
-
-  /** Append a batch's NEW L-gram keys to a [[writeSubstringIndex]]
-    * table (set semantics preserved via the anti-join) — the
-    * maintenance half of the incremental pair, x81's convention. */
-  def appendSubstringIndex(batch: DataFrame, idCol: String,
-                           textCol: String, L: Int,
-                           table: String): Unit = {
-    val spark = batch.sparkSession
-    // append under the table's OWN bucket spec (the appendEdgeIndex
-    // convention) — a mismatched bucket count is a hard engine error
-    val numBuckets = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(sys.error(s"$table is not bucketed"))
-    val fresh = substringGramKeys(batch, idCol, textCol, L)
-      .join(spark.table(table), Seq("gram_key"), "left_anti")
-    Sinks.writeBucketed(fresh, table, Seq("gram_key"), numBuckets,
-      append = true)
   }
 
   /** [[substringDupSpans]] for a NEW BATCH against a FROZEN
@@ -1169,35 +1150,6 @@ object TextDedup {
     markedToSpans(hits, L)
   }
 
-  /** [[substringDupSpansIndexed]] through the snapshot pointer — the
-    * versioned serving read (the [[graft.operators.Retrieval
-    * .bm25TopKIndexedVersioned]] convention): resolves the family's
-    * current gram-key table once per query build, so a
-    * [[graft.streaming.Streams.substringIngestVersioned]] publish
-    * mid-flight leaves this reader on its complete old snapshot.
-    * Version 0 = the unversioned base table (migrate-in). */
-  def substringDupSpansIndexedVersioned(batch: DataFrame, idCol: String,
-                                        textCol: String, L: Int,
-                                        ledgerTable: String,
-                                        indexName: String,
-                                        indexBase: String): DataFrame = {
-    val Seq(t) = Snapshots.resolve(batch.sparkSession, ledgerTable,
-      indexName, Seq(indexBase))
-    substringDupSpansIndexed(batch, idCol, textCol, L, t)
-  }
-
-  /** [[substringDedupApplyIndexed]] through the snapshot pointer —
-    * the versioned form of the one-call surgery serve. */
-  def substringDedupApplyIndexedVersioned(batch: DataFrame,
-                                          idCol: String, textCol: String,
-                                          L: Int, ledgerTable: String,
-                                          indexName: String,
-                                          indexBase: String): DataFrame = {
-    val Seq(t) = Snapshots.resolve(batch.sparkSession, ledgerTable,
-      indexName, Seq(indexBase))
-    substringDedupApplyIndexed(batch, idCol, textCol, L, t)
-  }
-
   // ---- manifest-staged substring index layout -----------------------
   // The publish-by-MANIFEST form of the versioned gram-key family
   // (x213's partial-merge shape applied to the substring tier): a
@@ -1207,11 +1159,6 @@ object TextDedup {
   // rewriting the whole index — O(batch) staging with the same
   // one-ledger-row commit and zero residual
   // ([[graft.streaming.Streams.substringIngestManifest]]).
-
-  /** Physical name of the family's manifest table at `version` — the
-    * tiny `(segment)` list the ledger's pointer makes current. */
-  def substringManifestTable(indexBase: String, version: Long): String =
-    Snapshots.tableAt(s"${indexBase}_mf", version)
 
   /** Physical name of the segment staged when `version` published. */
   def substringSegmentTable(indexBase: String, version: Long): String =
@@ -1231,10 +1178,9 @@ object TextDedup {
       if (spark.catalog.tableExists(indexBase)) Seq(indexBase)
       else Seq.empty
     } else {
-      val mf = substringManifestTable(indexBase, cur)
-      spark.catalog.refreshTable(mf)
-      spark.table(mf).select(col("segment"))
-        .collect().map(_.getString(0)).sorted.toSeq
+      val segs = Snapshots.manifestSegments(spark, indexBase, Seq(cur))
+      require(segs.nonEmpty, s"$indexName v$cur has no manifest")
+      segs.toSeq.sorted
     }
   }
 
@@ -1298,7 +1244,7 @@ object TextDedup {
                                    version: Long,
                                    segments: Seq[String]): Unit = {
     import spark.implicits._
-    val mf = substringManifestTable(indexBase, version)
+    val mf = Snapshots.manifestAt(indexBase, version)
     Sinks.dropManaged(spark, mf)
     segments.toDF("segment").coalesce(1).write.format("parquet")
       .saveAsTable(mf)
@@ -1309,8 +1255,9 @@ object TextDedup {
     * every segment table no SURVIVING manifest references (a folded
     * compact strands its inputs; a retired version strands segments
     * newer versions no longer list). The version-0 base is never
-    * dropped here ([[Snapshots.decommissionBase]] owns that). Ledger
-    * rows stay, as everywhere. Returns the dropped table names. */
+    * dropped here ([[Snapshots.decommissionBase]] owns that, once no
+    * surviving manifest lists it). Ledger rows stay, as everywhere.
+    * Returns the dropped table names. */
   def retireSubstringManifest(spark: SparkSession, ledgerTable: String,
                               indexName: String, indexBase: String,
                               keepVersions: Int = 2): Seq[String] = {
@@ -1319,17 +1266,10 @@ object TextDedup {
     val cutoff = cur - keepVersions
     if (cutoff < 1) Seq.empty
     else {
-      val referenced = ((cutoff + 1) to cur).flatMap { v =>
-        val mf = substringManifestTable(indexBase, v)
-        if (!spark.catalog.tableExists(mf)) Seq.empty
-        else {
-          spark.catalog.refreshTable(mf)
-          spark.table(mf).select(col("segment"))
-            .collect().map(_.getString(0)).toSeq
-        }
-      }.toSet
+      val referenced =
+        Snapshots.manifestSegments(spark, indexBase, (cutoff + 1) to cur)
       val deadMf = (1L to cutoff)
-        .map(substringManifestTable(indexBase, _))
+        .map(Snapshots.manifestAt(indexBase, _))
         .filter(spark.catalog.tableExists(_))
       val deadSeg = (1L to cur)
         .map(substringSegmentTable(indexBase, _))
@@ -1361,13 +1301,13 @@ object TextDedup {
 
   /** [[substringDedupApply]] for a NEW BATCH against a FROZEN
     * [[writeSubstringIndex]] corpus — the serving form of the surgery
-    * twin (x225's cut under x227's span law), and the batch-mode body
-    * of [[graft.streaming.Streams.substringIngest]]'s per-micro-batch
-    * work: spans from [[substringDupSpansIndexed]] (one doubling pass
-    * over the batch + a bucketed semi-join; corpus text never
-    * rescanned), cut by the shared fused-`aggregate` rewrite. Output
-    * `(doc_id, n_chars_removed, clean_text)` over the batch documents
-    * only; the corpus copy is always the keeper. */
+    * twin (x225's cut under x227's span law), and the single-segment
+    * case of [[graft.streaming.Streams.substringIngestManifest]]'s
+    * per-micro-batch cut: spans from [[substringDupSpansIndexed]] (one
+    * doubling pass over the batch + a bucketed semi-join; corpus text
+    * never rescanned), cut by the shared fused-`aggregate` rewrite.
+    * Output `(doc_id, n_chars_removed, clean_text)` over the batch
+    * documents only; the corpus copy is always the keeper. */
   def substringDedupApplyIndexed(batch: DataFrame, idCol: String,
                                  textCol: String, L: Int,
                                  indexTable: String): DataFrame =
@@ -1377,9 +1317,10 @@ object TextDedup {
   /** The character-surgery half of [[substringDedupApply]] with the
     * span decisions supplied — so the one-shot (x225), the indexed
     * serve ([[substringDupSpansIndexed]]'s spans) and the streaming
-    * ingest ([[graft.streaming.Streams.substringIngest]]) all cut with
-    * the same fused-`aggregate` rewrite. `spans` must be disjoint per
-    * document (island-merged — both producers guarantee it). */
+    * ingest ([[graft.streaming.Streams.substringIngestManifest]]) all
+    * cut with the same fused-`aggregate` rewrite. `spans` must be
+    * disjoint per document (island-merged — both producers guarantee
+    * it). */
   def applyCharSpans(docs: DataFrame, idCol: String, textCol: String,
                      spans: DataFrame): DataFrame = {
     val sp = spans.groupBy(col("doc_id"))

@@ -685,58 +685,6 @@ object Streams {
         } finally survivors.unpersist()
     }
 
-  /** Streaming EXACT-SUBSTRING dedup ingest — the streaming twin of
-    * batch x227 ([[graft.operators.TextDedup.substringDupSpansIndexed]])
-    * and the closing of [[graft.operators.TextDedup.writeSubstringIndex]]'s
-    * incremental contract: each micro-batch is (1) span-checked against
-    * the persisted gram-key index (one doubling pass over the batch +
-    * a bucketed semi-join — corpus text never rescanned), (2) CUT
-    * (duplicated spans excised character-exact, the x225 surgery) and
-    * the cleaned `(doc_id, n_chars_removed, clean_text)` frame handed
-    * to `sink`, and (3) the CLEANED text's keys appended to the index
-    * (set semantics — the anti-join form), so a batch-N+1 document
-    * repeating batch-N's surviving material is cut against it. The
-    * index reflects the post-surgery corpus — what actually entered —
-    * which is the Lee et al. pipeline run continuously.
-    *
-    * REPLAYS NEED THE LEDGER GUARD, unlike the other unversioned
-    * ingests: a replayed micro-batch (crash after the key append) is
-    * span-checked against an index that already holds ITS OWN cleaned
-    * keys, so every kept segment matches and `sink` would be
-    * re-delivered near-emptied documents under the same batch id — an
-    * overwrite-by-batch-id sink would replace correct output with
-    * gutted text. Pass `ledger` (an applied-batch table per
-    * [[graft.operators.Snapshots]] — a pure replay record here, no
-    * versioning: appends stay in place at version 0) and replayed
-    * epochs are skipped WHOLE before any work. The ledger row is
-    * published BEFORE the key append — the ledger is the commit point
-    * — so no reachable crash leaves the batch's own keys in the index
-    * without its ledger row: a crash before the publish replays the
-    * whole batch against the unchanged index (the sink sees the SAME
-    * cleaned frame again — plain at-least-once); a crash between the
-    * publish and the append skips the replay whole and leaves that
-    * one batch's keys MISSING from the index — a bounded, recoverable
-    * under-cut (later repeats of that batch's material pass uncut
-    * until a maintenance repair appends the keys), never a corrupt
-    * re-delivery. For zero residual window at per-batch index-rewrite
-    * cost, use [[substringIngestVersioned]]. Without `ledger` the
-    * caveat is the caller's to manage (safe only for sinks that
-    * ignore re-delivered batch ids entirely). Epoch ids are
-    * meaningful within ONE checkpoint lineage — re-pointing a NEW
-    * checkpoint at an existing ledger aliases old epochs; start a
-    * fresh ledger with a fresh checkpoint. */
-  def substringIngest(docs: DataFrame, idCol: String, textCol: String,
-                      L: Int, indexTable: String, compactEvery: Int = 0,
-                      ledger: Option[(String, String)] = None)
-                     (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-          org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        substringIngestBatch(batch.toDF(), batchId, idCol, textCol, L,
-          indexTable, compactEvery, ledger)(sink)
-    }
-
   /** Streaming CHAR-level benchmark-decontamination scrub — x232's
     * serving form at ingest ([[boilerplateScrub]]'s role on the
     * substring tier): each micro-batch is span-checked against the
@@ -744,11 +692,12 @@ object Streams {
     * ([[graft.operators.TextDedup.substringContaminatedSpans]] — no
     * first-occurrence exemption, no batch-internal leg) and the
     * contaminated spans are cut character-exact before `sink` sees
-    * the rows. UNLIKE [[substringIngest]] there is no append and no
-    * ledger: the benchmark is an immutable release artifact, so the
-    * scrub is pure per-batch computation — replays recompute the
-    * identical cleaned frame by construction (at-least-once
-    * redelivery of the SAME rows, safe for idempotent sinks).
+    * the rows. UNLIKE [[substringIngestManifest]] nothing is staged
+    * and there is no ledger: the benchmark is an immutable release
+    * artifact, so the scrub is pure per-batch computation — replays
+    * recompute the identical cleaned frame by construction
+    * (at-least-once redelivery of the SAME rows, safe for idempotent
+    * sinks).
     * `foreachBatch` only because the index is a catalog table (the
     * [[dsirGate]] convention); the work itself is stateless. */
   def substringDecontamScrub(docs: DataFrame, idCol: String,
@@ -766,185 +715,46 @@ object Streams {
             benchIndexTable)), batchId)
     }
 
-  /** [[substringIngest]]'s batch handler, factored out so the spec can
-    * drive the crash windows directly (`crashAfterStep` ∈ {sink,
-    * publish, append} — production wiring passes None). Step order is
-    * the commit-point law the scaladoc above states: sink → publish →
-    * append. */
-  private[graft] def substringIngestBatch(b: DataFrame, batchId: Long,
-                                          idCol: String, textCol: String,
-                                          L: Int, indexTable: String,
-                                          compactEvery: Int,
-                                          ledger: Option[(String, String)],
-                                          crashAfterStep: Option[String] =
-                                            None)
-                                         (sink: (DataFrame, Long) => Unit)
-      : Unit = {
-    import graft.operators.Snapshots
-    def step(s: String): Unit =
-      if (crashAfterStep.contains(s))
-        throw new IllegalStateException(s"injected crash after step $s")
-    val td = graft.operators.TextDedup
-    val spark = b.sparkSession
-    val bid = s"stream-$batchId"
-    val replayed = ledger.exists { case (lt, ln) =>
-      Snapshots.isApplied(spark, lt, ln, bid)
-    }
-    if (!replayed) {
-      recoverAll(spark, Seq(indexTable))
-      val spans = td.substringDupSpansIndexed(b, idCol, textCol, L,
-        indexTable)
-      val cleaned = td.applyCharSpans(b, idCol, textCol, spans).cache()
-      try {
-        sink(cleaned, batchId)
-        step("sink")
-        ledger.foreach { case (lt, ln) =>
-          Snapshots.publish(spark, lt, ln,
-            Snapshots.currentVersion(spark, lt, ln), bid, "append")
-        }
-        step("publish")
-        td.appendSubstringIndex(cleaned, "doc_id", "clean_text", L,
-          indexTable)
-        step("append")
-        maybeCompact(spark, Seq(indexTable), batchId, compactEvery)
-      } finally cleaned.unpersist()
-    }
-  }
-
-  /** [[substringIngest]] through the VERSIONED publish-by-pointer
-    * protocol — the exact-substring family's staged ingest, closing
-    * even the unversioned form's missing-keys residual: each
-    * micro-batch stages the ENTIRE next gram-key snapshot (current
-    * keys ∪ the batch's cleaned keys — an overwrite a crashed
-    * attempt's rerun rebuilds bit-identically, because the span check
-    * runs against the still-current snapshot until the publish) and
-    * commits it with ONE ledger row. Batch 0 bootstraps version 1
-    * from its own post-surgery text — or MIGRATES IN PLACE: an
-    * existing unversioned [[graft.operators.TextDedup
-    * .writeSubstringIndex]] table at `indexBase` serves as version 0
-    * (batch 0 span-checks against it and folds it into v1 with zero
-    * rebuild; `retire` never drops the version-0 base). Kill at ANY
-    * step and the replay
-    * re-delivers the SAME cleaned frame and converges to the same
-    * index; a replay after the publish is a whole-batch no-op. The
-    * price is rewriting the key table per batch (the
-    * [[graft.operators.Graph.appendEdgeIndexVersionedStaged]] trade)
-    * — right for low-cadence batch ingests where a single-table
-    * snapshot is worth the rewrite; high-cadence streams take
-    * [[substringIngestManifest]] (the same zero-residual commit at
-    * O(batch) staging cost via segment manifests) or
-    * [[substringIngest]]'s in-place append with its bounded
-    * missing-keys window. Old snapshots retire past `keepVersions`
-    * (grace = the batch cadence); serving reads resolve through
-    * [[graft.operators.Snapshots.resolve]]. */
-  def substringIngestVersioned(docs: DataFrame, idCol: String,
-                               textCol: String, L: Int,
-                               ledgerTable: String, indexName: String,
-                               indexBase: String, numBuckets: Int = 16,
-                               keepVersions: Int = 2)
-                              (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-          org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        substringIngestVersionedBatch(batch.toDF(), batchId, idCol,
-          textCol, L, ledgerTable, indexName, indexBase, numBuckets,
-          keepVersions)(sink)
-        ()
-    }
-
-  /** [[substringIngestVersioned]]'s batch handler (spec-drivable kill
-    * hooks: `crashAfterStep` ∈ {sink, stage, publish}). Returns false
-    * on a replayed (already-published) epoch. */
-  private[graft] def substringIngestVersionedBatch(
-      b: DataFrame, batchId: Long, idCol: String, textCol: String,
-      L: Int, ledgerTable: String, indexName: String, indexBase: String,
-      numBuckets: Int, keepVersions: Int,
-      crashAfterStep: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit): Boolean = {
-    import graft.operators.Snapshots
-    def step(s: String): Unit =
-      if (crashAfterStep.contains(s))
-        throw new IllegalStateException(s"injected crash after step $s")
-    val td = graft.operators.TextDedup
-    val spark = b.sparkSession
-    val bid = s"stream-$batchId"
-    if (Snapshots.isApplied(spark, ledgerTable, indexName, bid)) false
-    else {
-      val cur = Snapshots.currentVersion(spark, ledgerTable, indexName)
-      val next = cur + 1
-      val nextT = Snapshots.tableAt(indexBase, next)
-      // MIGRATE-IN-PLACE (the ANN twin's contract): at version 0 an
-      // existing unversioned [[graft.operators.TextDedup
-      // .writeSubstringIndex]] table at `indexBase` IS the current
-      // snapshot — batch 0 span-checks against it and folds it into
-      // v1, zero rebuild (ignoring it would silently ship batch 0
-      // uncut against the whole pre-stream corpus). `retire` never
-      // drops version 0, so the migrated base survives as the
-      // operator's fallback.
-      val curT =
-        if (cur > 0L) Some(Snapshots.tableAt(indexBase, cur))
-        else if (spark.catalog.tableExists(indexBase)) Some(indexBase)
-        else None
-      // span-check against the CURRENT snapshot (cold bootstrap: the
-      // batch against itself) — never the staged one, so a crashed
-      // attempt's rerun recomputes the identical cleaned frame
-      val spans = curT match {
-        case Some(t) => td.substringDupSpansIndexed(b, idCol, textCol,
-          L, t)
-        case None => td.substringDupSpans(b, idCol, textCol, L)
-      }
-      val cleaned = td.applyCharSpans(b, idCol, textCol, spans).cache()
-      try {
-        sink(cleaned, batchId)
-        step("sink")
-        val newKeys =
-          td.substringGramKeys(cleaned, "doc_id", "clean_text", L)
-        val staged = curT match {
-          case Some(t) =>
-            spark.table(t).unionByName(newKeys).distinct()
-          case None => newKeys
-        }
-        graft.sinks.Sinks.dropManaged(spark, nextT)
-        graft.sinks.Sinks.writeBucketed(staged, nextT, Seq("gram_key"),
-          numBuckets)
-        step("stage")
-        Snapshots.publish(spark, ledgerTable, indexName, next, bid,
-          if (curT.isEmpty) "build" else "append-staged")
-        step("publish")
-        Snapshots.retire(spark, ledgerTable, indexName, Seq(indexBase),
-          keepVersions)
-        true
-      } finally { cleaned.unpersist(); () }
-    }
-  }
-
-  /** [[substringIngestVersioned]] at O(batch) staging cost — the
-    * MANIFEST-staged form, removing the one scale-law caveat the
-    * staged form carried (a full index rewrite per micro-batch): each
-    * micro-batch stages ONLY its own cleaned keys as a SEGMENT table
-    * plus a metadata-sized manifest listing the next version's
-    * segments, and commits both with the same ONE ledger row. A
-    * version's key set is the union of its manifest's segments
+  /** Streaming EXACT-SUBSTRING dedup ingest — the streaming twin of
+    * batch x227 ([[graft.operators.TextDedup.substringDupSpansIndexed]])
+    * and the exact-substring family's one ingest form: each micro-batch
+    * is (1) span-checked against the persisted gram-key index (one
+    * doubling pass over the batch + a bucketed semi-join — corpus text
+    * never rescanned), (2) CUT (duplicated spans excised
+    * character-exact, the x225 surgery) and the cleaned
+    * `(doc_id, n_chars_removed, clean_text)` frame handed to `sink`,
+    * and (3) the CLEANED text's keys staged as the batch's own SEGMENT
+    * table plus a metadata-sized manifest listing the next version's
+    * segments, both committed with ONE ledger row. A batch-N+1 document
+    * repeating batch-N's surviving material is cut against it; the
+    * index reflects the post-surgery corpus — what actually entered —
+    * which is the Lee et al. pipeline run continuously.
+    *
+    * A version's key set is the union of its manifest's segments
     * ([[graft.operators.TextDedup.substringDupSpansManifested]] — set
     * semantics make cross-segment duplicate keys harmless, which is
-    * exactly what buys the no-anti-join O(batch) stage). Same crash
-    * walk as the staged form, zero residual: the span check runs
-    * against the CURRENT manifest until the publish, so a kill at any
-    * step replays to the identical cleaned frame and converges to the
-    * same index; a replay after the publish is a whole-batch no-op.
-    * Deferred costs fold back in maintenance: every `compactEvery`
-    * batches (0 = never) the family compacts to a single deduplicated
-    * segment ([[graft.operators.TextDedup.substringManifestCompact]])
-    * — until then serving unions `compactEvery`-bounded segment scans.
-    * MIGRATE-IN-PLACE as the staged form: an unversioned
+    * exactly what buys the no-anti-join O(batch) stage). Zero residual
+    * crash window: the span check runs against the CURRENT manifest
+    * until the publish, so a kill at any step replays to the identical
+    * cleaned frame and converges to the same index; a replay after the
+    * publish is a whole-batch no-op (the ledger is the replay guard —
+    * epoch ids are meaningful within ONE checkpoint lineage, so start
+    * a fresh ledger with a fresh checkpoint). Deferred costs fold back
+    * in maintenance: every `compactEvery` batches (0 = never) the
+    * family compacts to a single deduplicated segment
+    * ([[graft.operators.TextDedup.substringManifestCompact]]) — until
+    * then serving unions `compactEvery`-bounded segment scans;
+    * `compactEvery = 1` keeps a single-table steady state.
+    * MIGRATE-IN-PLACE: an unversioned
     * [[graft.operators.TextDedup.writeSubstringIndex]] table at
-    * `indexBase` serves as version 0's only segment, folded in at the
-    * first compaction instead of batch 0 (zero rebuild at migration;
+    * `indexBase` serves as version 0's only segment — batch 0 is cut
+    * against it and every manifest lists it until the first compaction
+    * folds it in (zero rebuild at migration;
     * [[graft.operators.Snapshots.decommissionBase]] reclaims the base
-    * once the lineage outgrows the grace window). Retired manifests
+    * once no manifest in the grace window lists it). Retired manifests
     * and the segments they strand drop past `keepVersions`
-    * ([[graft.operators.TextDedup.retireSubstringManifest]]). */
+    * ([[graft.operators.TextDedup.retireSubstringManifest]] — never the
+    * base). */
   def substringIngestManifest(docs: DataFrame, idCol: String,
                               textCol: String, L: Int,
                               ledgerTable: String, indexName: String,
@@ -969,8 +779,8 @@ object Streams {
     }
 
   /** [[substringIngestManifest]]'s batch handler (spec-drivable kill
-    * hooks: `crashAfterStep` ∈ {sink, stage, publish} — the staged
-    * form's exact walk). Returns false on a replayed epoch. */
+    * hooks: `crashAfterStep` ∈ {sink, stage, publish}). Returns false
+    * on a replayed epoch. */
   private[graft] def substringIngestManifestBatch(
       b: DataFrame, batchId: Long, idCol: String, textCol: String,
       L: Int, ledgerTable: String, indexName: String, indexBase: String,

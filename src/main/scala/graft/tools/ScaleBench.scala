@@ -1637,11 +1637,9 @@ object ScaleBench {
     // FIXED 500-doc batch ingested against a corpus-sized index built
     // once at warmup — the probe pins the round-19 claim that staging
     // is O(batch): only the span check's semi-join scan leg grows with
-    // the index; the staged-segment write does not. Compare
-    // substring_staged_ingest below (the full-rewrite form, whose
-    // per-batch cost IS the index size). Epochs derive from the
-    // family's current version, so replays never alias across passes
-    // or rounds.
+    // the index; the staged-segment write does not. Epochs derive
+    // from the family's current version, so replays never alias across
+    // passes or rounds.
     ("substring_manifest_ingest", (s: SparkSession, dir: String) => {
       import graft.operators.Snapshots
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
@@ -1662,31 +1660,6 @@ object ScaleBench {
         batch, epoch, "doc_id", "text", 24, ledT, "ssmi", base,
         numBuckets = 16, keepVersions = 2)((_, _) => ())
       s.table(TextDedup.substringSegmentTable(base, epoch + 1))
-    }),
-    // the STAGED form's per-batch cost at 10x index size — the
-    // comparison row for the manifest probe: every batch rewrites
-    // current ∪ new, so this one grows with the index by design (the
-    // documented low-cadence trade the manifest form removes).
-    ("substring_staged_ingest", (s: SparkSession, dir: String) => {
-      import graft.operators.Snapshots
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ledT = s"graft_idx.ssvi_led_$tag"
-      val base = s"graft_idx.ssvi_keys_$tag"
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_idx")
-      if (!s.catalog.tableExists(ledT)) {
-        graft.sinks.Sinks.dropManaged(s, base)
-        graft.streaming.Streams.substringIngestVersionedBatch(
-          Tables(s, dir, "documents"), 0L, "doc_id", "text", 24,
-          ledT, "ssvi", base, numBuckets = 16,
-          keepVersions = 2)((_, _) => ())
-      }
-      val epoch = Snapshots.currentVersion(s, ledT, "ssvi")
-      val batch = Tables(s, dir, "documents").orderBy(col("doc_id"))
-        .limit(500)
-      graft.streaming.Streams.substringIngestVersionedBatch(
-        batch, epoch, "doc_id", "text", 24, ledT, "ssvi", base,
-        numBuckets = 16, keepVersions = 2)((_, _) => ())
-      s.table(Snapshots.tableAt(base, epoch + 1))
     }),
     // the round-19 curation chain at 10x: x226's cost model + the
     // substring surgery's corpus-linear doubling shuffle + the char

@@ -541,23 +541,18 @@ class TextDedupSpec extends SparkSpec {
       .collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[Long]("span_start"), r.getAs[Long]("span_len")))
     assert(spans.toSet === oneShot.toSet)
-    // append maintenance: batch keys folded in, set semantics kept
-    val before = spark.table(idxT).count()
-    TextDedup.appendSubstringIndex(batch, "doc_id", "text", 24, idxT)
-    val after = spark.table(idxT).count()
-    assert(after > before)
-    assert(spark.table(idxT).select("gram_key").distinct().count()
-      === after, "append broke set semantics")
-    // idempotent: a replayed append adds nothing
-    TextDedup.appendSubstringIndex(batch, "doc_id", "text", 24, idxT)
-    assert(spark.table(idxT).count() === after)
-    // post-append, the batch dedups against ITSELF via the index too:
-    // every batch gram now indexed -> all batch docs fully covered
-    val re = TextDedup.substringDupSpansIndexed(batch, "doc_id", "text",
-        24, idxT)
+    // extending the set: the batch's keys staged as a second segment
+    // (the manifest ingest's append) — the batch now dedups against
+    // ITSELF via the index too: every batch gram indexed -> all batch
+    // docs fully covered
+    val segT = "graft_idx_test.ss_keys_seg1"
+    graft.sinks.Sinks.dropManaged(spark, segT)
+    TextDedup.writeSubstringIndex(batch, "doc_id", "text", 24, segT)
+    val re = TextDedup.substringDupSpansSegmented(batch, "doc_id", "text",
+        24, Seq(idxT, segT))
       .collect().map(r => r.getAs[Long]("doc_id")).distinct
     assert(re.toSet === Set(11L, 13L, 15L))
-    graft.sinks.Sinks.dropManaged(spark, idxT)
+    Seq(idxT, segT).foreach(graft.sinks.Sinks.dropManaged(spark, _))
   }
 
   test("substringContaminatedSpans (x232): benchmark-covered char " +
@@ -629,49 +624,6 @@ class TextDedupSpec extends SparkSpec {
           r.getAs[String]("clean_text"))).toMap
     assert(out === viaSpans)
     spark.sql(s"DROP TABLE IF EXISTS $idxT")
-  }
-
-  test("substring versioned serving reads: spans/apply resolve the " +
-      "current snapshot through the ledger — rows identical to the " +
-      "direct-table forms, and version 0 falls back to the base") {
-    import spark.implicits._
-    import graft.operators.Snapshots
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
-    val ledT = "graft_idx_test.ssvr_ledger"
-    val base = "graft_idx_test.ssvr_keys"
-    Seq(ledT, base, s"${base}_v1", s"${base}_v2")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val block = "The license block is repeated verbatim everywhere."
-    val corpus = Seq(
-      (100L, s"corpus document alpha carries the block: $block !"))
-      .toDF("doc_id", "text")
-    // version 0 (migrate-in): the unversioned base serves
-    TextDedup.writeSubstringIndex(corpus, "doc_id", "text", 24, base,
-      numBuckets = 2)
-    val batch = Seq(
-      (1L, s"batch doc one also carries $block plus its own tail."))
-      .toDF("doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(TextDedup.substringDupSpansIndexedVersioned(batch,
-        "doc_id", "text", 24, ledT, "ssvr", base))
-      === rows(TextDedup.substringDupSpansIndexed(batch, "doc_id",
-        "text", 24, base)))
-    // publish v1 with a DIFFERENT key set; the versioned read follows
-    // the pointer, the direct read stays on the table it was given
-    TextDedup.writeSubstringIndex(
-      Seq((200L, "a completely different corpus now, no block."))
-        .toDF("doc_id", "text"), "doc_id", "text", 24, s"${base}_v1",
-      numBuckets = 2)
-    Snapshots.publish(spark, ledT, "ssvr", 1L, "b1", "build")
-    val viaPointer = TextDedup.substringDedupApplyIndexedVersioned(
-      batch, "doc_id", "text", 24, ledT, "ssvr", base)
-    assert(rows(viaPointer) === rows(TextDedup.substringDedupApplyIndexed(
-      batch, "doc_id", "text", 24, s"${base}_v1")))
-    // against v1 (no shared block) the batch passes uncut
-    assert(viaPointer.head().getAs[Long]("n_chars_removed") === 0L)
-    Seq(ledT, base, s"${base}_v1", s"${base}_v2")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("substringDedupApply (x225): spans cut character-exact, " +

@@ -661,64 +661,6 @@ class StreamsSpec extends SparkSpec {
       .map(_.getLong(0)).toSet == Set(100L, 2L))
   }
 
-  test("substringIngest: batch docs are span-cut against the frozen " +
-      "gram-key index, cleaned text enters the index, and later " +
-      "batches dedup against earlier survivors (x227 twin)") {
-    import graft.operators.TextDedup
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
-    val idxT = "graft_idx_test.ss_stream_keys"
-    val ledT = "graft_idx_test.ss_stream_ledger"
-    Seq(idxT, ledT).foreach(dropIdxTable)
-    val block = "The license block is repeated verbatim everywhere."
-    val corpusDoc = s"corpus document alpha carries the block: $block !"
-    TextDedup.writeSubstringIndex(
-      Seq((100L, corpusDoc)).toDF("doc_id", "text"), "doc_id", "text",
-      24, idxT, numBuckets = 2)
-
-    val dir = Files.createTempDirectory("ssingest-in").toString
-    val ckpt = Files.createTempDirectory("ssingest-ckpt").toString
-    val got = scala.collection.mutable.Map[Long, (Long, String)]()
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    def run(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(dir)
-      val q = Streams.substringIngest(stream, "doc_id", "text",
-          L = 24, idxT, ledger = Some((ledT, "ss"))) { (df, _) =>
-        val rows = df.collect().map(r => r.getAs[Long]("doc_id") ->
-          (r.getAs[Long]("n_chars_removed"), r.getAs[String]("clean_text")))
-        got.synchronized { got ++= rows; () }
-      }.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-    }
-
-    // batch 1: doc 1 shares the corpus block (cut); doc 2 is novel
-    val novel = "a wholly novel streaming document with nothing shared."
-    Seq((1L, s"stream doc one also carries $block plus its own tail."),
-        (2L, novel))
-      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    run()
-    assert(got(1L)._1 > 0L, got.toString)
-    assert(!got(1L)._2.contains(block), got(1L)._2)
-    assert(got(2L) === (0L, novel))
-    // batch 2: a doc repeating batch 1's SURVIVING novel text is cut
-    // against it — only possible because the ingest appended the
-    // cleaned keys
-    Seq((3L, novel)).toDF("doc_id", "text")
-      .write.mode("append").parquet(dir)
-    run()
-    assert(got(3L) === (novel.length.toLong, ""), got(3L).toString)
-    // the replay guard's record: one applied-batch row per epoch, and
-    // a hand-replayed epoch id reads as already applied
-    import graft.operators.Snapshots
-    assert(Snapshots.ledger(spark, ledT, "ss")
-      .select("batch_id").collect().map(_.getString(0)).toSet
-      === Set("stream-0", "stream-1"))
-    assert(Snapshots.isApplied(spark, ledT, "ss", "stream-0"))
-    assert(!Snapshots.isApplied(spark, ledT, "ss", "stream-2"))
-    Seq(idxT, ledT).foreach(dropIdxTable)
-  }
-
   test("substringDecontamScrub: arriving docs are cut against the " +
       "frozen benchmark gram index inside the stream (x232 twin) — " +
       "leaked spans excised, clean docs byte-identical, batch parity") {
@@ -767,235 +709,17 @@ class StreamsSpec extends SparkSpec {
     dropIdxTable(idxT)
   }
 
-  test("substringIngest crash windows: the ledger row is the commit " +
-      "point — every kill point replays to the SAME cleaned frame or " +
-      "a whole-batch no-op, never gutted text; the one residual is " +
-      "missing keys, repaired by the idempotent append") {
-    import graft.operators.{Snapshots, TextDedup}
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
-    val block = "The license block is repeated verbatim everywhere."
-    val novel = "a wholly novel streaming document with nothing shared."
-    val b = Seq(
-      (1L, s"stream doc one also carries $block plus its own tail."),
-      (2L, novel)).toDF("doc_id", "text")
-    for (kill <- Seq("sink", "publish", "append")) {
-      val idxT = s"graft_idx_test.ssw_keys_$kill"
-      val ledT = s"graft_idx_test.ssw_ledger_$kill"
-      Seq(idxT, ledT).foreach(dropIdxTable)
-      TextDedup.writeSubstringIndex(
-        Seq((100L, s"corpus document alpha carries the block: $block !"))
-          .toDF("doc_id", "text"),
-        "doc_id", "text", 24, idxT, numBuckets = 2)
-      val deliveries =
-        scala.collection.mutable.ArrayBuffer[Map[Long, (Long, String)]]()
-      def run(crash: Option[String]): Unit =
-        try Streams.substringIngestBatch(b, 0L, "doc_id", "text", 24,
-            idxT, 0, Some((ledT, "ss")), crash) { (df, _) =>
-          deliveries += df.collect().map(r => r.getAs[Long]("doc_id") ->
-            (r.getAs[Long]("n_chars_removed"),
-              r.getAs[String]("clean_text"))).toMap
-          ()
-        } catch {
-          case e: IllegalStateException
-            if e.getMessage.startsWith("injected") => ()
-        }
-      run(Some(kill)) // the crash
-      run(None)       // the at-least-once replay
-      // every delivery of epoch 0 is the SAME cleaned frame — the
-      // pre-r18 append-before-publish ordering re-delivered a
-      // near-emptied frame at its append→publish window
-      assert(deliveries.nonEmpty, kill)
-      assert(deliveries.forall(_ == deliveries.head),
-        s"$kill: $deliveries")
-      assert(deliveries.head(2L) === ((0L, novel)), kill)
-      assert(deliveries.head(1L)._1 > 0L, kill)
-      // a crash before the publish replays whole (two deliveries);
-      // after it, the replay is skipped whole (one)
-      assert(deliveries.size === (if (kill == "sink") 2 else 1), kill)
-      assert(Snapshots.isApplied(spark, ledT, "ss", "stream-0"))
-      // publish-kill's residual is MISSING keys (bounded, honest),
-      // never corruption — and the set-semantic append repairs it
-      spark.catalog.refreshTable(idxT)
-      def hasNovelKeys: Boolean =
-        !TextDedup.substringGramKeys(
-            Seq((9L, novel)).toDF("doc_id", "text"), "doc_id", "text", 24)
-          .join(spark.table(idxT), Seq("gram_key"), "left_semi").isEmpty
-      if (kill == "publish") {
-        assert(!hasNovelKeys, kill)
-        TextDedup.appendSubstringIndex(deliveries.head.toSeq
-            .map { case (id, (_, t)) => (id, t) }
-            .toDF("doc_id", "clean_text"),
-          "doc_id", "clean_text", 24, idxT)
-        assert(hasNovelKeys, "repair append")
-      } else assert(hasNovelKeys, kill)
-      Seq(idxT, ledT).foreach(dropIdxTable)
-    }
-  }
-
-  test("substringIngest residual closed by maintenance: a publish-kill's " +
-      "missing-keys gap is repaired by the registered gram-key " +
-      "MaintainedIndex (x229's shape) — the healed index cuts a later " +
-      "repeat of the crashed batch's survivor") {
-    import graft.operators.{Snapshots, TextDedup, Warehouse}
-    import graft.runner.{MaintainedIndex, Maintenance}
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
-    val idxT = "graft_idx_test.ssheal_keys"
-    val ledT = "graft_idx_test.ssheal_ledger"
-    val outT = "graft_idx_test.ssheal_out"
-    Seq(idxT, ledT, outT).foreach(dropIdxTable)
-    val block = "The license block is repeated verbatim everywhere."
-    val novel = "a wholly novel streaming document with nothing shared."
-    val corpusDoc = s"corpus document alpha carries the block: $block !"
-    TextDedup.writeSubstringIndex(
-      Seq((100L, corpusDoc)).toDF("doc_id", "text"), "doc_id", "text",
-      24, idxT, numBuckets = 2)
-    // the sink is the post-surgery corpus table — what production
-    // delivers downstream and what the maintained corpus reads
-    def sink(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      df.select(col("doc_id"), col("clean_text"))
-        .write.mode("append").format("parquet").saveAsTable(outT)
-    def ingest(b: org.apache.spark.sql.DataFrame, epoch: Long,
-               crash: Option[String]): Unit =
-      try Streams.substringIngestBatch(b, epoch, "doc_id", "text", 24,
-        idxT, 0, Some((ledT, "ss")), crash)(sink)
-      catch {
-        case e: IllegalStateException
-          if e.getMessage.startsWith("injected") => ()
-      }
-    // epoch 0 crashes between publish and append: delivered, ledger
-    // row landed, keys MISSING (the documented bounded residual)
-    ingest(Seq((1L, novel)).toDF("doc_id", "text"), 0L, Some("publish"))
-    ingest(Seq((1L, novel)).toDF("doc_id", "text"), 0L, None) // no-op
-    assert(Snapshots.isApplied(spark, ledT, "ss", "stream-0"))
-    // the gap is live: a READ-ONLY span check of a repeat of the
-    // survivor finds nothing to cut (a continuing stream would also
-    // self-heal forward via its own appends — the probe stays
-    // read-only so the gap is still open for the maintenance repair)
-    spark.catalog.refreshTable(idxT)
-    assert(TextDedup.substringDupSpansIndexed(
-      Seq((2L, novel)).toDF("doc_id", "text"), "doc_id", "text", 24,
-      idxT).isEmpty)
-    // the registered maintained index (x229's shape): corpus = the
-    // original corpus doc + everything the sink delivered
-    val idx = MaintainedIndex("ss_keys",
-      tables = Seq(("gram_keys", idxT, Seq.empty[String])),
-      corpusKeys = ss => TextDedup.substringGramKeys(
-        ss.table(outT).select(col("doc_id"),
-            col("clean_text").as("text"))
-          .unionByName(Seq((100L, corpusDoc)).toDF("doc_id", "text")),
-        "doc_id", "text", 24),
-      indexKeys = ss => ss.table(idxT).select(col("gram_key")),
-      appendMissing = Some((ss, keys) =>
-        graft.sinks.Sinks.writeBucketed(keys.toDF("gram_key"), idxT,
-          Seq("gram_key"), 2, append = true)),
-      deleteStale = Some((ss, keys) =>
-        Warehouse.deleteFromIndex(ss, idxT, "gram_key", keys)),
-      compactFilesFactor = Double.MaxValue)
-    val log = Maintenance.runCycle(spark, Seq(idx))
-    assert(log.exists(_.action == "append_missing"), log.mkString("; "))
-    assert(log.last.detail === "missing=0 stale=0", log.mkString("; "))
-    // healed: the SAME repeat ingested for real is now fully cut
-    ingest(Seq((3L, novel)).toDF("doc_id", "text"), 1L, None)
-    spark.catalog.refreshTable(outT)
-    assert(spark.table(outT).filter(col("doc_id") === 3L)
-      .head().getAs[String]("clean_text") === "")
-    Seq(idxT, ledT, outT).foreach(dropIdxTable)
-  }
-
-  test("substringIngestVersionedBatch: staged snapshot + one-ledger-row " +
-      "commit — kill at every step, every replay re-delivers the same " +
-      "cleaned frame, the index converges bit-identical, retire " +
-      "reclaims past the grace window") {
-    import graft.operators.{Snapshots, TextDedup}
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
-    val ledT = "graft_idx_test.ssv_ledger"
-    val base = "graft_idx_test.ssv_keys"
-    (Seq(ledT, base) ++ (1 to 6).map(v => s"${base}_v$v"))
-      .foreach(dropIdxTable)
-    val block = "The license block is repeated verbatim everywhere."
-    val novel = "a wholly novel streaming document with nothing shared."
-    val batches = Map(
-      0L -> Seq(
-        (1L, s"first doc carries the block once: $block end."),
-        (2L, s"second doc repeats it: $block with a tail."))
-        .toDF("doc_id", "text"),
-      1L -> Seq(
-        (3L, novel),
-        (4L, s"fourth doc carries $block yet again, uncut otherwise."))
-        .toDF("doc_id", "text"),
-      2L -> Seq((5L, s"fifth doc re-sends the novel text: $novel ."))
-        .toDF("doc_id", "text"))
-    val deliveries = scala.collection.mutable.Map[Long,
-      scala.collection.mutable.ArrayBuffer[Map[Long, (Long, String)]]]()
-    def run(epoch: Long, crash: Option[String]): Boolean =
-      try Streams.substringIngestVersionedBatch(batches(epoch), epoch,
-          "doc_id", "text", 24, ledT, "ssv", base, numBuckets = 2,
-          keepVersions = 1, crashAfterStep = crash) { (df, e) =>
-        deliveries.getOrElseUpdate(e,
-          scala.collection.mutable.ArrayBuffer.empty) +=
-          df.collect().map(r => r.getAs[Long]("doc_id") ->
-            (r.getAs[Long]("n_chars_removed"),
-              r.getAs[String]("clean_text"))).toMap
-        ()
-      } catch {
-        case e: IllegalStateException
-          if e.getMessage.startsWith("injected") => false
-      }
-    // the full kill walk on the bootstrap AND the steady-state batch:
-    // crash after sink, after stage, after publish, then the replay
-    Seq(0L, 1L).foreach { epoch =>
-      Seq("sink", "stage", "publish").foreach(k => run(epoch, Some(k)))
-      assert(!run(epoch, None)) // post-publish replay: whole-batch no-op
-      val d = deliveries(epoch)
-      assert(d.size === 3, s"epoch $epoch: ${d.size}") // one per attempt
-      assert(d.forall(_ == d.head), s"epoch $epoch diverged: $d")
-    }
-    // semantics across epochs: batch 0's doc 1 keeps the block (global
-    // first), doc 2's copy is cut; batch 1 is checked against v1 —
-    // novel survives, the block is cut
-    assert(deliveries(0L).head(1L)._1 === 0L)
-    assert(deliveries(0L).head(2L)._1 > 0L)
-    assert(deliveries(1L).head(3L) === ((0L, novel)))
-    assert(deliveries(1L).head(4L)._1 > 0L)
-    // convergence: the resolved snapshot IS the post-surgery corpus's
-    // key set, bit-identical to a from-scratch build over the cleaned
-    // frames the sink received
-    val Seq(curT) = Snapshots.resolve(spark, ledT, "ssv", Seq(base))
-    assert(curT === s"${base}_v2")
-    val cleaned = (deliveries(0L).head ++ deliveries(1L).head).toSeq
-      .map { case (id, (_, t)) => (id, t) }.toDF("doc_id", "clean_text")
-    val expect = TextDedup.substringGramKeys(cleaned, "doc_id",
-      "clean_text", 24).collect().map(_.getLong(0)).toSet
-    spark.catalog.refreshTable(curT)
-    assert(spark.table(curT).collect().map(_.getLong(0)).toSet === expect)
-    // one ledger row per batch, no staging conflicts
-    assert(Snapshots.ledger(spark, ledT, "ssv").collect()
-      .map(r => (r.getLong(1), r.getString(2), r.getString(3))).toSet
-      === Set((1L, "stream-0", "build"),
-        (2L, "stream-1", "append-staged")))
-    assert(Snapshots.versionConflicts(spark, ledT, "ssv").isEmpty)
-    // batch 2 (no kill): dup of batch 1's survivor is fully cut against
-    // the SERVED snapshot, and retire (keep=1) reclaims v1 and v2
-    assert(run(2L, None))
-    val d2 = deliveries(2L).head
-    assert(d2(5L)._1 >= novel.length.toLong, d2.toString)
-    assert(!spark.catalog.tableExists(s"${base}_v1"))
-    assert(!spark.catalog.tableExists(s"${base}_v2"))
-    assert(spark.catalog.tableExists(s"${base}_v3"))
-    (Seq(ledT, base) ++ (1 to 6).map(v => s"${base}_v$v"))
-      .foreach(dropIdxTable)
-  }
-
-  test("substringIngestVersioned migrate-in-place: an existing " +
+  test("substringIngestManifest migrate-in-place: an existing " +
       "unversioned gram-key table serves as version 0 — batch 0 is " +
-      "cut against it and v1 folds it in with zero rebuild; the " +
-      "version-0 base survives retire") {
+      "cut against it, v1's manifest lists it beside seg1, retire " +
+      "never drops it and the first compaction folds it in") {
     import graft.operators.{Snapshots, TextDedup}
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
-    val ledT = "graft_idx_test.ssvm_ledger"
-    val base = "graft_idx_test.ssvm_keys"
-    (Seq(ledT, base) ++ (1 to 4).map(v => s"${base}_v$v"))
-      .foreach(dropIdxTable)
+    val ledT = "graft_idx_test.ssmm_ledger"
+    val base = "graft_idx_test.ssmm_keys"
+    val aux = (1 to 4).flatMap(v => Seq(s"${base}_seg$v",
+      s"${base}_mf_v$v"))
+    (Seq(ledT, base) ++ aux).foreach(dropIdxTable)
     val block = "The license block is repeated verbatim everywhere."
     val corpusDoc = s"corpus document alpha carries the block: $block !"
     // the pre-stream corpus index, built by the BATCH path (x227's
@@ -1004,49 +728,59 @@ class StreamsSpec extends SparkSpec {
       Seq((100L, corpusDoc)).toDF("doc_id", "text"), "doc_id", "text",
       24, base, numBuckets = 2)
     val novel = "a wholly novel streaming document with nothing shared."
-    val b0 = Seq(
-      (1L, s"stream doc one also carries $block plus its own tail."),
-      (2L, novel)).toDF("doc_id", "text")
     val got = scala.collection.mutable.Map[Long, (Long, String)]()
-    assert(Streams.substringIngestVersionedBatch(b0, 0L, "doc_id",
-        "text", 24, ledT, "ssvm", base, numBuckets = 2,
-        keepVersions = 1) { (df, _) =>
-      got ++= df.collect().map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[Long]("n_chars_removed"),
-          r.getAs[String]("clean_text")))
-      ()
-    })
+    def ingest(b: org.apache.spark.sql.DataFrame, epoch: Long): Boolean =
+      Streams.substringIngestManifestBatch(b, epoch, "doc_id", "text", 24,
+          ledT, "ssmm", base, numBuckets = 2, keepVersions = 1) {
+        (df, _) =>
+          got ++= df.collect().map(r => r.getAs[Long]("doc_id") ->
+            (r.getAs[Long]("n_chars_removed"),
+              r.getAs[String]("clean_text")))
+          ()
+      }
+    assert(ingest(Seq(
+      (1L, s"stream doc one also carries $block plus its own tail."),
+      (2L, novel)).toDF("doc_id", "text"), 0L))
     // batch 0 was cut against the MIGRATED corpus, not bootstrapped
     // blind
     assert(got(1L)._1 > 0L && !got(1L)._2.contains(block), got(1L))
     assert(got(2L) === ((0L, novel)))
-    // v1 = base ∪ cleaned batch keys; the ledger records a staged
-    // append onto the migrated snapshot, not a blind build
-    assert(Snapshots.ledger(spark, ledT, "ssvm").collect()
+    // v1 = the base + the batch's own segment (zero rebuild); the
+    // ledger records a staged append onto the migrated snapshot, not a
+    // blind build
+    assert(TextDedup.substringSegments(spark, ledT, "ssmm", base) ===
+      Seq(base, s"${base}_seg1"))
+    assert(Snapshots.ledger(spark, ledT, "ssmm").collect()
       .map(r => (r.getLong(1), r.getString(3))).toSet
       === Set((1L, "append-staged")))
+    // v2's retire (keepVersions = 1) reclaims v1's manifest, not the base
+    assert(ingest(Seq((3L, "another brand new doc, nothing shared either."))
+      .toDF("doc_id", "text"), 1L))
+    assert(!spark.catalog.tableExists(s"${base}_mf_v1"))
+    assert(spark.catalog.tableExists(base))
+    // the first compaction folds the base in: ONE segment holding the
+    // migrated corpus's keys ∪ every batch's cleaned keys
+    assert(TextDedup.substringManifestCompact(spark, ledT, "ssmm", base,
+      numBuckets = 2))
+    assert(TextDedup.substringSegments(spark, ledT, "ssmm", base) ===
+      Seq(s"${base}_seg3"))
     val expect = TextDedup.substringGramKeys(
         got.toSeq.map { case (id, (_, t)) => (id, t) }
-          .toDF("doc_id", "clean_text")
-          .select(col("doc_id"), col("clean_text").as("text"))
+          .toDF("doc_id", "text")
           .unionByName(Seq((100L, corpusDoc)).toDF("doc_id", "text")),
         "doc_id", "text", 24)
       .collect().map(_.getLong(0)).toSet
-    spark.catalog.refreshTable(s"${base}_v1")
-    assert(spark.table(s"${base}_v1").collect()
+    spark.catalog.refreshTable(s"${base}_seg3")
+    assert(spark.table(s"${base}_seg3").collect()
       .map(_.getLong(0)).toSet === expect)
-    // the version-0 base is never retired (keepVersions = 1 and a
-    // second batch publishing v2 retires v1, not the base)
-    assert(Streams.substringIngestVersionedBatch(
-      Seq((3L, "another brand new doc, nothing shared either."))
-        .toDF("doc_id", "text"),
-      1L, "doc_id", "text", 24, ledT, "ssvm", base, numBuckets = 2,
-      keepVersions = 1)((_, _) => ()))
+    // retire past the compaction drops the folded segments, still
+    // never the base ([[Snapshots.decommissionBase]] owns that)
+    TextDedup.retireSubstringManifest(spark, ledT, "ssmm", base,
+      keepVersions = 1)
+    assert(!spark.catalog.tableExists(s"${base}_seg1"))
+    assert(!spark.catalog.tableExists(s"${base}_seg2"))
     assert(spark.catalog.tableExists(base))
-    assert(!spark.catalog.tableExists(s"${base}_v1"))
-    assert(spark.catalog.tableExists(s"${base}_v2"))
-    (Seq(ledT, base) ++ (1 to 4).map(v => s"${base}_v$v"))
-      .foreach(dropIdxTable)
+    (Seq(ledT, base) ++ aux).foreach(dropIdxTable)
   }
 
   test("decommissionBase: the migrated version-0 base is reclaimed " +
@@ -1057,43 +791,87 @@ class StreamsSpec extends SparkSpec {
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
     val ledT = "graft_idx_test.ssdc_ledger"
     val base = "graft_idx_test.ssdc_keys"
-    (Seq(ledT, s"${ledT}_events", base) ++
-      (1 to 4).map(v => s"${base}_v$v")).foreach(dropIdxTable)
+    val aux = (1 to 4).flatMap(v => Seq(s"${base}_seg$v",
+      s"${base}_mf_v$v"))
+    (Seq(ledT, s"${ledT}_events", base) ++ aux).foreach(dropIdxTable)
+    val corpusDoc = "corpus document alpha, migrated in place."
     TextDedup.writeSubstringIndex(
-      Seq((100L, "corpus document alpha, migrated in place."))
-        .toDF("doc_id", "text"),
+      Seq((100L, corpusDoc)).toDF("doc_id", "text"),
       "doc_id", "text", 24, base, numBuckets = 2)
     def batch(id: Long, epoch: Long): Boolean =
-      Streams.substringIngestVersionedBatch(
+      Streams.substringIngestManifestBatch(
         Seq((id, s"novel streaming doc number $id, sharing nothing."))
           .toDF("doc_id", "text"),
         epoch, "doc_id", "text", 24, ledT, "ssdc", base,
         numBuckets = 2, keepVersions = 1)((_, _) => ())
-    assert(batch(1L, 0L)) // v1 folds the base in
+    def decommission(): Boolean =
+      Snapshots.decommissionBase(spark, ledT, "ssdc", Seq(base),
+        keepVersions = 1)
+    assert(batch(1L, 0L)) // v1 lists the base + seg1
     // inside the grace window (cur=1, keep=1): refused, base intact —
     // a reader that resolved just before v1 may still hold the base
-    assert(!Snapshots.decommissionBase(spark, ledT, "ssdc", Seq(base),
-      keepVersions = 1))
+    assert(!decommission())
     assert(spark.catalog.tableExists(base))
-    assert(batch(2L, 1L)) // v2: the lineage outgrew the window
-    assert(Snapshots.decommissionBase(spark, ledT, "ssdc", Seq(base),
-      keepVersions = 1))
+    // v2 outgrows the window, but its manifest still LISTS the base:
+    // refused, or serving would lose the migrated corpus's keys
+    assert(batch(2L, 1L))
+    assert(!decommission())
+    assert(spark.catalog.tableExists(base))
+    // the first compaction folds the base in (v3 lists only seg3); with
+    // the listing manifests out of the window the base goes
+    assert(TextDedup.substringManifestCompact(spark, ledT, "ssdc", base,
+      numBuckets = 2))
+    assert(decommission())
     assert(!spark.catalog.tableExists(base))
     val ev = Snapshots.events(spark, ledT, "ssdc").collect()
     assert(ev.length === 1 &&
       ev.head.getAs[String]("event") === "decommission_base",
       ev.mkString("; "))
     // idempotent: the repeat finds nothing to drop, logs nothing
-    assert(!Snapshots.decommissionBase(spark, ledT, "ssdc", Seq(base),
-      keepVersions = 1))
+    assert(!decommission())
     assert(Snapshots.events(spark, ledT, "ssdc").count() === 1L)
-    // serving and replay survive the drop: resolve reads v2, and the
-    // migration batch's replay is still a ledger no-op (its row stays)
-    assert(Snapshots.resolve(spark, ledT, "ssdc", Seq(base)).head ===
-      s"${base}_v2")
+    // serving and replay survive the drop: the folded segment still
+    // cuts the migrated corpus's text, and the migration batch's replay
+    // is still a ledger no-op (its row stays)
+    assert(TextDedup.substringDedupApplyManifested(
+        Seq((9L, corpusDoc)).toDF("doc_id", "text"), "doc_id", "text", 24,
+        ledT, "ssdc", base)
+      .head().getAs[String]("clean_text") === "")
     assert(!batch(1L, 0L))
-    (Seq(ledT, s"${ledT}_events", base) ++
-      (1 to 4).map(v => s"${base}_v$v")).foreach(dropIdxTable)
+    (Seq(ledT, s"${ledT}_events", base) ++ aux).foreach(dropIdxTable)
+  }
+
+  test("decommissionBase keeps a migrated base the live manifest still " +
+      "lists: past the grace window by version count, the call refuses " +
+      "and the manifested serve still reads the base's keys") {
+    import graft.operators.{Snapshots, TextDedup}
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
+    val ledT = "graft_idx_test.ssdl_ledger"
+    val base = "graft_idx_test.ssdl_keys"
+    val aux = (1 to 2).flatMap(v => Seq(s"${base}_seg$v",
+      s"${base}_mf_v$v"))
+    (Seq(ledT, s"${ledT}_events", base) ++ aux).foreach(dropIdxTable)
+    val corpusDoc = "corpus document alpha, migrated in place."
+    TextDedup.writeSubstringIndex(
+      Seq((100L, corpusDoc)).toDF("doc_id", "text"),
+      "doc_id", "text", 24, base, numBuckets = 2)
+    Seq(0L, 1L).foreach(epoch => assert(
+      Streams.substringIngestManifestBatch(
+        Seq((epoch + 1, s"novel streaming doc number $epoch, no overlap."))
+          .toDF("doc_id", "text"),
+        epoch, "doc_id", "text", 24, ledT, "ssdl", base,
+        numBuckets = 2, keepVersions = 1)((_, _) => ())))
+    assert(TextDedup.substringSegments(spark, ledT, "ssdl", base) ===
+      Seq(base, s"${base}_seg1", s"${base}_seg2"))
+    assert(!Snapshots.decommissionBase(spark, ledT, "ssdl", Seq(base),
+      keepVersions = 1))
+    assert(spark.catalog.tableExists(base))
+    assert(Snapshots.events(spark, ledT, "ssdl").count() === 0L)
+    assert(TextDedup.substringDedupApplyManifested(
+        Seq((9L, corpusDoc)).toDF("doc_id", "text"), "doc_id", "text", 24,
+        ledT, "ssdl", base)
+      .head().getAs[String]("clean_text") === "")
+    (Seq(ledT, s"${ledT}_events", base) ++ aux).foreach(dropIdxTable)
   }
 
   test("substringIngestManifestBatch: O(batch) segment staging + " +
@@ -1146,7 +924,8 @@ class StreamsSpec extends SparkSpec {
       assert(d.size === 3, s"epoch $epoch: ${d.size}")
       assert(d.forall(_ == d.head), s"epoch $epoch diverged: $d")
     }
-    // cut semantics identical to the staged form's walk
+    // cut semantics: batch 0's first copy of the block keeps, the
+    // second is cut; batch 1 is checked against v1
     assert(deliveries(0L).head(1L)._1 === 0L)
     assert(deliveries(0L).head(2L)._1 > 0L)
     assert(deliveries(1L).head(3L) === ((0L, novel)))
@@ -1164,7 +943,7 @@ class StreamsSpec extends SparkSpec {
     assert(spark.table(s"${base}_seg2").collect()
       .map(_.getLong(0)).toSet === keysOf(cleaned1))
     // the served union = the from-scratch key set over both cleaned
-    // frames (the staged form's convergence law, via the manifest)
+    // frames (the convergence law, via the manifest)
     assert(TextDedup.substringSegments(spark, ledT, "ssm", base) ===
       Seq(s"${base}_seg1", s"${base}_seg2"))
     val expect = keysOf(cleaned0) ++ keysOf(cleaned1)
@@ -1214,25 +993,31 @@ class StreamsSpec extends SparkSpec {
     (Seq(ledT, base) ++ aux).foreach(dropIdxTable)
   }
 
-  test("substringIngestVersioned wiring: a file-backed stream publishes " +
-      "each micro-batch through the staged protocol; later batches cut " +
-      "against earlier survivors via the resolved snapshot") {
+  test("substringIngestManifest wiring: a file-backed stream publishes " +
+      "each micro-batch through the manifest, compactEvery folds the " +
+      "family to one segment, and later batches cut against earlier " +
+      "survivors before and after the fold") {
     import graft.operators.{Snapshots, TextDedup}
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_test")
-    val ledT = "graft_idx_test.ssvw_ledger"
-    val base = "graft_idx_test.ssvw_keys"
-    (Seq(ledT, base) ++ (1 to 4).map(v => s"${base}_v$v"))
-      .foreach(dropIdxTable)
+    val ledT = "graft_idx_test.ssmw_ledger"
+    val base = "graft_idx_test.ssmw_keys"
+    val aux = (1 to 6).flatMap(v => Seq(s"${base}_seg$v",
+      s"${base}_mf_v$v"))
+    (Seq(ledT, base) ++ aux).foreach(dropIdxTable)
     val novel = "a wholly novel streaming document with nothing shared."
-    val dir = Files.createTempDirectory("ssvingest-in").toString
-    val ckpt = Files.createTempDirectory("ssvingest-ckpt").toString
+    val other = "another novel streaming text, unlike the first one."
+    val dir = Files.createTempDirectory("ssmingest-in").toString
+    val ckpt = Files.createTempDirectory("ssmingest-ckpt").toString
     val got = scala.collection.mutable.Map[Long, (Long, String)]()
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    def run(): Unit = {
+    def run(id: Long, text: String): Unit = {
+      Seq((id, text)).toDF("doc_id", "text")
+        .write.mode("append").parquet(dir)
       val stream = spark.readStream.schema(schema).parquet(dir)
-      val q = Streams.substringIngestVersioned(stream, "doc_id", "text",
-          L = 24, ledT, "ssvw", base, numBuckets = 2) { (df, _) =>
+      val q = Streams.substringIngestManifest(stream, "doc_id", "text",
+          L = 24, ledT, "ssmw", base, numBuckets = 2,
+          compactEvery = 2) { (df, _) =>
         val rows = df.collect().map(r => r.getAs[Long]("doc_id") ->
           (r.getAs[Long]("n_chars_removed"),
             r.getAs[String]("clean_text")))
@@ -1241,19 +1026,24 @@ class StreamsSpec extends SparkSpec {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(120000)
     }
-    // batch 0 bootstraps v1 from its own post-surgery text
-    Seq((1L, novel)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(dir)
-    run()
+    // batches 0 and 1 bootstrap v1 and stage v2 from novel text
+    run(1L, novel)
     assert(got(1L) === ((0L, novel)))
-    // batch 1: a repeat of the survivor is cut against the v1 snapshot
-    Seq((2L, novel)).toDF("doc_id", "text")
-      .write.mode("append").parquet(dir)
-    run()
-    assert(got(2L) === ((novel.length.toLong, "")), got(2L).toString)
-    assert(Snapshots.currentVersion(spark, ledT, "ssvw") === 2L)
-    (Seq(ledT, base) ++ (1 to 4).map(v => s"${base}_v$v"))
-      .foreach(dropIdxTable)
+    run(2L, other)
+    assert(got(2L) === ((0L, other)))
+    assert(TextDedup.substringSegments(spark, ledT, "ssmw", base).size
+      === 2)
+    // batch 2: a repeat of batch 0's survivor is cut against the
+    // segment union, then the wiring's compaction folds the family
+    run(3L, novel)
+    assert(got(3L) === ((novel.length.toLong, "")), got(3L).toString)
+    assert(TextDedup.substringSegments(spark, ledT, "ssmw", base) ===
+      Seq(s"${base}_seg4"))
+    // batch 3: a later repeat is still cut, now against the one segment
+    run(4L, other)
+    assert(got(4L) === ((other.length.toLong, "")), got(4L).toString)
+    assert(Snapshots.currentVersion(spark, ledT, "ssmw") === 5L)
+    (Seq(ledT, base) ++ aux).foreach(dropIdxTable)
   }
 
   test("splitAssignIngest: near-dups inherit the matched doc's split; " +
